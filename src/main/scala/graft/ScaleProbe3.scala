@@ -42,19 +42,11 @@ object ScaleProbe3 {
     val enriched = LogPipeline.run(spark, spark.read.parquet(in), SequenceGen.configs)
     val parts = sys.env.get("PROBE_ROUTE_PARTS").map(_.toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
-    // PROBE_MODE: full (default) | count (parse+enrich map only) |
-    // shuffle (+salted repartition, no write) — phase isolation at scale
+    // PROBE_MODE: full (default) | count (parse+enrich map only)
     sys.env.getOrElse("PROBE_MODE", "full") match {
       case "count" =>
         enriched.agg(org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("ts")),
           org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.col("n_tok"))).collect(): Unit
-      case "shuffle" =>
-        import org.apache.spark.sql.functions._
-        enriched.select(col("doc_id"), col("tokens"), col("n_tok"), col("source"),
-            col("host"), col("source_id"), col("ts"), col("offset"), col("sink"))
-          .withColumn("_salt", pmod(hash(col("doc_id")), lit(parts * 8)))
-          .repartition(parts, col("sink"), col("_salt"))
-          .agg(max(col("ts")), sum(col("n_tok"))).collect(): Unit
       case _ =>
         LogPipeline.routeWrite(enriched, out, parts)
         spark.read.parquet(out).groupBy("sink").count().collect(): Unit

@@ -985,11 +985,10 @@ object SparkEntry {
         // see withStreamScratch: the trailing no-data batch is pure
         // watermark bookkeeping for a checkpoint this harness deletes
         s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        // saltBuckets matches the harness's 8 stream shuffle partitions
-        // (set just above): 32 writer tasks per 100k-row micro-batch were
-        // pure scheduling overhead + 4x the part files at this batch size
+        // writers matches the harness's 8 stream shuffle partitions (set
+        // just above): at most 8 part files per sink per micro-batch
         graft.streaming.StreamingPipeline.ingestDedup(s, in, out, ckpt,
-          EventsAdapter.configs, horizon = "10 days", saltBuckets = 8,
+          EventsAdapter.configs, horizon = "10 days", writers = 8,
           maxFilesPerTrigger = Some(4)).awaitTermination()
         s.read.parquet(out).select(col("doc_id"))
           .localCheckpoint(eager = true) // outlives the scratch dirs below

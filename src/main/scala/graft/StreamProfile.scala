@@ -9,7 +9,7 @@ import graft.sources.EventsAdapter
   * find where the wall actually goes before touching anything). Replicates
   * the withStreamScratch harness of SparkEntry's q_stream_* entries but
   * times each phase — streaming run, compaction, serve — separately.
-  * Non-contractual (like PipeProfile/ScaleDiag); numbers feed
+  * Non-contractual (like ScaleDiag); numbers feed
   * OPTIMIZATION_r06.md only.
   */
 object StreamProfile {
@@ -131,7 +131,7 @@ object StreamProfile {
     cycle("stream_dedup") { (ckpt, sink) =>
       val (t1, _) = time(drainProgress(graft.streaming.StreamingPipeline.ingestDedup(
         spark, stagedDedup, sink, ckpt, EventsAdapter.configs,
-        horizon = "10 days", saltBuckets = 8, maxFilesPerTrigger = Some(4))))
+        horizon = "10 days", writers = 8, maxFilesPerTrigger = Some(4))))
       val (t2, _) = time(spark.read.parquet(sink).select(col("doc_id"))
         .localCheckpoint(eager = true).count())
       Seq("stream" -> t1, "serve" -> t2)

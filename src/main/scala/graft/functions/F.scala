@@ -68,6 +68,13 @@ object F {
       configs.map(c => (globToRegex(c.source_glob), c.file_type, c.extractors, c.time_field)),
       graft.model.SourceConfig.defaultExtractors, "_time"))
 
+  /** Per-source `(host, host_type, file_type, sink)` struct, resolved once
+    * per distinct source (see ResolveSource).
+    */
+  def source_config(source: Column, configs: Seq[graft.model.SourceConfig]): Column =
+    toCol(ResolveSource(toExpr(source), configs.map(c =>
+      (globToRegex(c.source_glob), c.host, c.host_type, c.file_type))))
+
   /** Per-source event-time parse (see EventTime). */
   def event_time(timeStr: Column, source: Column,
       configs: Seq[graft.model.SourceConfig]): Column = {
@@ -91,8 +98,8 @@ object F {
   /** Predicate: does `c` contain fragment `frag` under reference semantics. */
   def fragMatches(c: Column, frag: String): Column = c.rlike(compileFrag(frag))
 
-  /** filepath.Match-style glob (reference plugins/steps/Utils.go:41) as a SQL
-    * predicate. `*` does not cross `/`; `?` matches one non-/ char.
+  /** filepath.Match-style glob (reference plugins/steps/Utils.go:41) as an
+    * anchored regex. `*` does not cross `/`; `?` matches one non-/ char.
     */
   def globToRegex(glob: String): String = {
     val sb = new StringBuilder("^")
@@ -104,8 +111,6 @@ object F {
     }
     sb.append("$").toString
   }
-
-  def globMatches(c: Column, glob: String): Column = c.rlike(globToRegex(glob))
 
   /** Reference ParseTime (pkg/logsuck/parser/ParseTime.go:24-54): Go layout
     * strings plus UNIX / UNIX_MILLIS / UNIX_DECIMAL_NANOS, as built-in

@@ -11,8 +11,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, S
   * per-partition parse/route/skew metrics via SparkListener accumulators").
   *
   * Collects task-level records/bytes/time and derives a skew ratio
-  * (max task time / median task time) per stage — the signal that the salted
-  * repartition in the route stage is actually defeating source skew.
+  * (max task time / median task time) per stage — the signal that the route
+  * stage's writer tasks (the input's splits, never keyed by source) are
+  * actually defeating source skew.
   */
 class PipelineMetrics extends SparkListener {
 

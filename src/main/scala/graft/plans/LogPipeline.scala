@@ -13,17 +13,19 @@ import graft.model.SourceConfig
   *   parse     — render tokens -> raw, extract dynamic fields, derive ts
   *               (reference P1-P3); tokens carried untouched (per-row
   *               token-array-equality invariant)
-  *   enrich    — broadcast equi-join against the source_config dimension;
-  *               the non-equi glob match is evaluated once per *distinct
-  *               source* (tiny) and converted to an equi-join key, so the
-  *               big side never sees a nested-loop join (reference J2)
-  *   route     — salted repartition + fan-out write partitioned by sink
+  *   enrich    — the broadcast lookup of the source_config dimension (J2):
+  *               one codegen'd expression ([[graft.functions.ResolveSource]])
+  *               carries the config table to every task and resolves each
+  *               *distinct source* once (first glob match wins) to
+  *               host/host_type/file_type/sink — the non-equi glob match
+  *               never runs per row, and no join or extra job is planned
+  *   route     — fan-out write partitioned by sink straight off the scan's
+  *               byte-sized splits, sorted by (sink, ts) within each task
   *               (reference S5-S7 forwarder/recipient topology)
   *   aggregate — per-sink counts (A3), field stats (A1), time histogram
   *
-  * All stages are Dataset/Catalyst expressions — one shuffle for the route
-  * (repartition) and one tiny one for the enrich dimension; the parse stage
-  * is pure whole-stage-codegen map work.
+  * All stages are Dataset/Catalyst expressions. Scan -> parse -> enrich ->
+  * sort -> write is ONE stage: no shuffle anywhere on the route path.
   */
 object LogPipeline {
 
@@ -37,74 +39,30 @@ object LogPipeline {
       .withColumn("offset", regexp_extract(col("doc_id"), "(\\d+)$", 1).cast("long"))
       .withColumn("source_id", col("source"))
 
-  /** The config dimension as a DataFrame (broadcast side). */
-  def configDim(spark: SparkSession, configs: Seq[SourceConfig]): DataFrame = {
-    import spark.implicits._
-    configs.zipWithIndex.map { case (c, i) =>
-      (c.source_glob, F.globToRegex(c.source_glob), c.file_type, c.time_field,
-        c.time_layout, c.host, c.host_type, i)
-    }.toDF("source_glob", "glob_regex", "file_type", "time_field",
-      "time_layout", "cfg_host", "host_type", "priority")
-  }
-
-  /** enrich: resolve each event's source to its config (first match wins by
-    * priority) and stamp host/host_type/ts + the dynamic fields map.
+  /** enrich: resolve each event's source to its config (first glob match
+    * wins, in config order) and stamp host/host_type/file_type/sink, the
+    * dynamic fields map and ts. One enrich serves batch and streaming
+    * frames alike.
     *
-    * Scale shape: `distinct sources` is a partial-aggregated shuffle over a
-    * low-cardinality key; the glob (non-equi) match runs on that tiny frame
-    * only; the result is broadcast and the 10^12-row side does a broadcast
-    * hash equi-join — no big-side shuffle at all.
+    * Scale shape: the config lookup is a broadcast lookup shipped inside the
+    * expression and memoized per distinct source per task, so the big side
+    * pays one hash probe per row — no distinct-sources job, no join, no
+    * exchange. A null source gets null host/host_type/file_type/sink.
     */
-  def enrich(spark: SparkSession, parsed: DataFrame, configs: Seq[SourceConfig]): DataFrame = {
-    val dim = configDim(spark, configs)
-    val sources = parsed.select("source").distinct()
-    val resolved = sources.join(dim, expr("source rlike glob_regex"), "left")
-      .groupBy("source")
-      .agg(min_by(
-        struct(col("file_type"), col("time_field"), col("time_layout"),
-          col("cfg_host"), col("host_type"), col("priority")),
-        col("priority")).as("cfg"))
-      .select(col("source"),
-        coalesce(col("cfg.cfg_host"), lit("unknown-host")).as("host"),
-        coalesce(col("cfg.host_type"), lit("unknown")).as("host_type"),
-        coalesce(col("cfg.file_type"), lit("kv")).as("file_type"),
-        // sink is a pure function of `source`: computing it here (once per
-        // distinct source) instead of per row removes a regexp_replace from
-        // the 10^12-row side (measured 13s/8M rows — the single biggest
-        // map-side cost after the fix)
-        sinkCol.as("sink"))
-
-    val withHost = parsed.join(broadcast(resolved), Seq("source"), "left")
-
-    // fields + ts are per-config *plan constants* (extractor regexes and time
-    // layouts can't travel through a join), so they compile to expressions
-    // with the same first-match-wins glob dispatch. Both run straight off the
-    // tokens payload; ts goes through the time-only extraction so plans that
-    // never touch `fields` (the fan-out write) prune the map build entirely.
-    withHost
-      .withColumn("fields",
-        F.extract_event_tokens(col("tokens"), col("host"), col("source"), configs))
-      .withColumn("ts", tsColumnTokens(configs))
-  }
-
-  /** enrich without the dimension join — host/host_type resolved through the
-    * same first-match-wins CASE chain as fields/ts. Used on unbounded
-    * (streaming) inputs where a distinct+join per micro-plan isn't legal, and
-    * as the zero-shuffle enrich when the config set is small.
-    */
-  def enrichStatic(parsed: DataFrame, configs: Seq[SourceConfig]): DataFrame = {
-    def chain(f: SourceConfig => String, dflt: String): Column =
-      configs.foldRight(lit(dflt): Column) { (cfg, acc) =>
-        when(F.globMatches(col("source"), cfg.source_glob), lit(f(cfg))).otherwise(acc)
-      }
+  def enrich(parsed: DataFrame, configs: Seq[SourceConfig]): DataFrame =
     parsed
-      .withColumn("host", chain(_.host, "unknown-host"))
-      .withColumn("host_type", chain(_.host_type, "unknown"))
-      .withColumn("file_type", chain(_.file_type, "kv"))
+      .withColumn("_cfg", F.source_config(col("source"), configs))
+      .select(col("*") +: Seq("host", "host_type", "file_type", "sink")
+        .map(f => col(s"_cfg.$f").as(f)): _*)
+      .drop("_cfg")
+      // fields + ts are per-config *plan constants* (extractor regexes and
+      // time layouts), compiled to expressions with the same first-match-wins
+      // glob dispatch. Both run straight off the tokens payload; ts goes
+      // through the time-only extraction so plans that never touch `fields`
+      // (the fan-out write) prune the map build entirely.
       .withColumn("fields",
         F.extract_event_tokens(col("tokens"), col("host"), col("source"), configs))
       .withColumn("ts", tsColumnTokens(configs))
-  }
 
   /** Search-time field extraction per source config (first glob match wins,
     * memoized inside one compact ExtractEvent expression — a CASE-WHEN chain
@@ -136,21 +94,23 @@ object LogPipeline {
     coalesce(F.event_time(timeStr, col("source"), configs), fallbackTs)
   }
 
-  /** Sink key for the fan-out write: filesystem-safe source name. */
-  def sinkCol: Column = regexp_replace(col("source"), "[^A-Za-z0-9_-]", "_")
+  /** Sink key for the fan-out write: filesystem-safe source name, resolved
+    * once per distinct source (the `sink` field of the enrich lookup).
+    */
+  def sinkCol: Column = F.source_config(col("source"), Nil).getField("sink")
 
-  /** Route-shuffle width from DATA volume, not cluster width. At a fixed
-    * width the per-task volume grows linearly with input, and the write
-    * stage falls off a memory cliff once sort buffers + parquet encoders
-    * outgrow their share of the executor heap (measured on the scaling rig:
-    * 64M rows over 16 tasks = 160 s vs 79 s over 64 tasks — BASELINE.md
-    * headroom notes). A real cluster sizes tasks by bytes; so do we: exact
-    * input-file byte sum (driver metadata, no job), `floor` = writer
-    * parallelism for small inputs, ~96 MB of input parquet per writer task,
-    * rounded UP to a whole multiple of the writer slots — a ragged last
-    * wave (e.g. 19 tasks on 16 slots) costs a full extra wave of wall time
-    * for 3 tasks' worth of work (measured: 20.3 s vs 14.9 s at 16M rows).
-    * Non-file-backed inputs (tests, streaming micro-batches) keep the floor.
+  /** Writer-task cap from DATA volume, not cluster width. At a fixed width
+    * the per-task volume grows linearly with input, and the write stage
+    * falls off a memory cliff once sort buffers + parquet encoders outgrow
+    * their share of the executor heap (measured on the scaling rig: 64M rows
+    * over 16 tasks = 160 s vs 79 s over 64 tasks — BASELINE.md headroom
+    * notes). A real cluster sizes tasks by bytes; so do we: exact input-file
+    * byte sum (driver metadata, no job), `floor` = writer parallelism for
+    * small inputs, ~192 MB of input parquet per writer task, rounded UP to a
+    * whole multiple of the writer slots — a ragged last wave (e.g. 19 tasks
+    * on 16 slots) costs a full extra wave of wall time for 3 tasks' worth of
+    * work (measured: 20.3 s vs 14.9 s at 16M rows). Non-file-backed inputs
+    * (tests, streaming micro-batches) keep the floor.
     */
   private def routeParts(df: DataFrame, floor: Int,
       targetBytes: Long = 192L << 20): Int = {
@@ -170,18 +130,18 @@ object LogPipeline {
     math.max(floor, math.max(1, waves) * floor)
   }
 
-  /** route: salted repartition + fan-out write, one directory per sink.
+  /** route: fan-out write, one directory per sink, in the same stage as the
+    * scan, parse and enrich — no shuffle.
     *
-    * The salt spreads each (possibly huge) source across all writer tasks so
-    * a 50%-skewed source can't serialize into one task — the explicit skew
-    * handling the north rule demands (AQE would also rebalance; we don't
-    * rely on it). The salt domain is 8x the partition count: with a domain
-    * equal to the partition count, hash collisions of (sink, salt) combos
-    * leave some writers with 3-4x the median load (observed skew 3.8); an
-    * oversized domain evens the per-partition combo count (observed < 1.3).
-    * The explicit partition count also stops AQE coalescing the salt away
-    * on small inputs. `numPartitions` is the writer-parallelism floor; the
-    * actual width scales with input bytes via [[routeParts]].
+    * The writer tasks are the incoming partitions: for a file-backed input,
+    * the scan's byte-sized splits. They are never keyed by source, so a
+    * 50%-skewed source spreads over every writer task exactly as it lies in
+    * the input and cannot pile onto one task — the explicit skew handling
+    * the north rule demands, with no salted repartition (no shuffle of
+    * every row) to pay for it. A frame with more partitions than
+    * `numPartitions` (scaled up with input bytes via [[routeParts]]) is
+    * narrowed with a `coalesce` (no shuffle), so a write makes at most that
+    * many files per sink; a narrower frame keeps its partitions as they are.
     */
   def routeWrite(enriched: DataFrame, outDir: String, numPartitions: Int,
       mode: String = "overwrite"): Unit = {
@@ -191,15 +151,11 @@ object LogPipeline {
     // at 10^12 rows this halves the write volume of the fan-out. `source_id`
     // is `source` by construction on every write path ([[parse]] defines it
     // so), so it is NOT stored either — [[openSinks]] re-derives it; that's
-    // one string column off every shuffled and written row (guide §2.3
-    // narrower rows / §6 write volume).
+    // one string column off every written row (guide §6 write volume).
     val persisted = enriched.select(
       col("doc_id"), col("tokens"), col("n_tok"), col("source"),
       col("host"), col("ts"), col("offset"), col("sink"))
-    val parts = routeParts(persisted, numPartitions)
-    val salted = persisted
-      .withColumn("_salt", pmod(hash(col("doc_id")), lit(parts * 8)))
-    salted.repartition(parts, col("sink"), col("_salt")).drop("_salt")
+    persisted.coalesce(routeParts(persisted, numPartitions))
       // cluster each output file by event time: the dynamic-partition writer
       // must sort by `sink` anyway, and adding `ts` gives parquet row-group
       // min/max stats that prune time-bounded queries (logsuck queries are
@@ -279,10 +235,10 @@ object LogPipeline {
         sum(when(col("value").rlike(NUMERIC_RX), col("n")).otherwise(0L))
           .as("n_numeric"))
 
-  /** Full batch pipeline: returns the enriched frame (lazily) with sink col
-    * (already provided by the enrich dimension — no per-row recompute).
+  /** Full batch pipeline: returns the enriched frame (lazily), sink column
+    * included. Plans no job.
     */
   def run(spark: SparkSession, sequences: DataFrame,
       configs: Seq[SourceConfig]): DataFrame =
-    enrich(spark, parse(sequences), configs)
+    enrich(parse(sequences), configs)
 }

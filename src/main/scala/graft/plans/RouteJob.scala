@@ -18,9 +18,10 @@ import graft.model.SourceConfig
   * into `batches` micro-batches (the batch's file list IS its offset range —
   * same model as Kafka offsets / Iceberg split planning). Each batch reads
   * ONLY its own files (no re-scan of already-committed data), is routed
-  * (salted repartition -> per-sink partitioned write into the batch's own
-  * directory) and committed by atomically publishing a lineage manifest
-  * (doc_id range, per-sink counts, row-set signature, input files).
+  * (one-stage per-sink partitioned write into the batch's own directory;
+  * `writers` caps the files per sink, see `LogPipeline.routeWrite`) and
+  * committed by atomically publishing a lineage manifest (doc_id range,
+  * per-sink counts, row-set signature, input files).
   *
   * On resume: committed batches are skipped; an orphan batch directory with
   * no manifest (mid-write kill) is removed and rewritten — exactly-once
@@ -29,7 +30,7 @@ import graft.model.SourceConfig
   * one uncommitted batch.
   */
 class RouteJob(spark: SparkSession, outDir: String,
-    batches: Int = 8, saltBuckets: Int = 32) {
+    batches: Int = 8, writers: Int = 32) {
 
   val lineageDir: Path = Paths.get(outDir, "_lineage")
 
@@ -79,7 +80,7 @@ class RouteJob(spark: SparkSession, outDir: String,
       if (failAfter >= 0 && committed >= failAfter) throw new SimulatedKill
       val sequences = spark.read.parquet(files: _*)
       val enriched = LogPipeline.run(spark, sequences, configs)
-      LogPipeline.routeWrite(enriched, batchDir(i).toString, saltBuckets)
+      LogPipeline.routeWrite(enriched, batchDir(i).toString, writers)
       // lineage from what was actually written (read-back = the "snapshot")
       val written = spark.read.parquet(batchDir(i).toString)
       val sinkRows = written.groupBy("sink").agg(

@@ -16,7 +16,7 @@ import graft.plans.LogPipeline
 object StreamingPipeline {
 
   /** Streaming ingest: watch `inputDir` for new sequence parquet files,
-    * parse -> enrich -> salted fan-out write per sink. The streaming
+    * parse -> enrich -> fan-out write per sink, one stage. The streaming
     * checkpoint tracks processed input files (the "offsets"); a restart with
     * the same checkpoint processes only new files — the streaming twin of
     * RouteJob's lineage manifests.
@@ -30,11 +30,11 @@ object StreamingPipeline {
     */
   def ingest(spark: SparkSession, inputDir: String, outDir: String,
       checkpointDir: String, configs: Seq[SourceConfig],
-      saltBuckets: Int = 32,
+      writers: Int = 32,
       trigger: Trigger = Trigger.AvailableNow(),
       indexDir: Option[String] = None): StreamingQuery =
     ingestReloading(spark, inputDir, outDir, checkpointDir, () => configs,
-      saltBuckets, trigger, indexDir)
+      writers, trigger, indexDir)
 
   /** [[ingest]] with HOT-RELOADED configs: `configsProvider` is evaluated
     * once per micro-batch, so an edited config file (new sources, changed
@@ -49,7 +49,7 @@ object StreamingPipeline {
     */
   def ingestReloading(spark: SparkSession, inputDir: String, outDir: String,
       checkpointDir: String, configsProvider: () => Seq[SourceConfig],
-      saltBuckets: Int = 32,
+      writers: Int = 32,
       trigger: Trigger = Trigger.AvailableNow(),
       indexDir: Option[String] = None): StreamingQuery = {
     val stream = spark.readStream
@@ -60,12 +60,12 @@ object StreamingPipeline {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val enriched = LogPipeline.run(batch.sparkSession, batch, configsProvider())
-        LogPipeline.routeWrite(enriched, s"$outDir/batch=$batchId", saltBuckets)
+        LogPipeline.routeWrite(enriched, s"$outDir/batch=$batchId", writers)
         // maintain the inverted full-text index at ingest time, like the
         // reference inserts into FTS4 EventRaws alongside Events (S5);
         // same per-batch-id idempotence as the row write
         indexDir.foreach { d =>
-          graft.plans.FullTextIndex.build(enriched, s"$d/batch=$batchId", saltBuckets)
+          graft.plans.FullTextIndex.build(enriched, s"$d/batch=$batchId", writers)
         }
       }
       .start()
@@ -96,31 +96,29 @@ object StreamingPipeline {
     * [[reconcileLate]] after any outage that may have exceeded it: the
     * batch anti-join repair lands every dropped-but-new event exactly once.
     *
-    * Stream-side work is parse + static enrich of only the dedup-key +
-    * payload columns (the `fields` map never enters the stateful plan);
-    * the sink resolution + salted fan-out run per micro-batch.
+    * Stream-side work is parse + enrich of only the dedup-key + payload +
+    * sink columns (the `fields` map never enters the stateful plan); the
+    * fan-out write runs per micro-batch.
     */
   def ingestDedup(spark: SparkSession, inputDir: String, outDir: String,
       checkpointDir: String, configs: Seq[SourceConfig],
       horizon: String = "2 hours",
-      saltBuckets: Int = 32,
+      writers: Int = 32,
       trigger: Trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     val reader = spark.readStream.schema(Schemas.sequences)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n): Unit)
-    val deduped = LogPipeline.enrichStatic(
+    val deduped = LogPipeline.enrich(
         LogPipeline.parse(reader.parquet(inputDir)), configs)
       .select("doc_id", "tokens", "n_tok", "source", "host",
-        "ts", "offset") // source_id never stored (see routeWrite)
+        "ts", "offset", "sink") // source_id never stored (see routeWrite)
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("host", "source", "ts", "offset")
     deduped.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        LogPipeline.routeWrite(
-          batch.withColumn("sink", LogPipeline.sinkCol),
-          s"$outDir/batch=$batchId", saltBuckets)
+        LogPipeline.routeWrite(batch, s"$outDir/batch=$batchId", writers)
       }
       .start()
   }
@@ -180,11 +178,11 @@ object StreamingPipeline {
   def reconcileLate(spark: SparkSession, inputDir: String, outDir: String,
       configs: Seq[SourceConfig],
       lateBatchId: String = s"late-${System.currentTimeMillis()}",
-      saltBuckets: Int = 32): Long = {
-    val parsed = LogPipeline.enrichStatic(
+      writers: Int = 32): Long = {
+    val parsed = LogPipeline.enrich(
         LogPipeline.parse(spark.read.parquet(inputDir)), configs)
       .select("doc_id", "tokens", "n_tok", "source", "host",
-        "ts", "offset") // source_id never stored (see routeWrite)
+        "ts", "offset", "sink") // source_id never stored (see routeWrite)
       // in-slice duplicates collapse first, mirroring the stream's
       // in-batch + stateful dedup on the same unique key
       .dropDuplicates("host", "source", "ts", "offset")
@@ -196,9 +194,7 @@ object StreamingPipeline {
     try {
       val n = missed.count()
       if (n > 0)
-        LogPipeline.routeWrite(
-          missed.withColumn("sink", LogPipeline.sinkCol),
-          s"$outDir/batch=$lateBatchId", saltBuckets)
+        LogPipeline.routeWrite(missed, s"$outDir/batch=$lateBatchId", writers)
       n
     } finally missed.unpersist(blocking = false): Unit
   }
@@ -212,8 +208,7 @@ object StreamingPipeline {
     val stream = spark.readStream
       .schema(Schemas.sequences)
       .parquet(inputDir)
-    LogPipeline.enrichStatic(LogPipeline.parse(stream), configs)
-      .withColumn("sink", LogPipeline.sinkCol)
+    LogPipeline.enrich(LogPipeline.parse(stream), configs)
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), bucket), col("sink"))
       .agg(count(lit(1)).as("n"))
@@ -402,7 +397,7 @@ object StreamingPipeline {
     val stream = spark.readStream
       .schema(Schemas.sequences)
       .parquet(inputDir)
-    LogPipeline.enrichStatic(LogPipeline.parse(stream), configs)
+    LogPipeline.enrich(LogPipeline.parse(stream), configs)
       .withWatermark("ts", watermark)
       .select(col("ts"), col("source"),
         explode(col("fields")).as(Seq("key", "value")))

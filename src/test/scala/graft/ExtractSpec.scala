@@ -187,7 +187,7 @@ class ExtractSpec extends AnyFunSuite {
     val seqs = SequenceGen.sequences(spark, 2000, 8)
     val parsed = graft.plans.LogPipeline.parse(seqs)
     val cfgs = SequenceGen.configs
-    val viaFields = graft.plans.LogPipeline.enrichStatic(parsed, cfgs)
+    val viaFields = graft.plans.LogPipeline.enrich(parsed, cfgs)
       .withColumn("ts2", graft.plans.LogPipeline.tsColumn(cfgs))
     val diff = viaFields.filter(col("ts") =!= col("ts2")).count()
     assert(diff == 0)

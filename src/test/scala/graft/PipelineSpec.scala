@@ -92,13 +92,56 @@ class PipelineSpec extends AnyFunSuite {
     assert(enriched("doc-2") == (("unknown-host", "unknown")))
   }
 
-  test("enrichStatic equals join-based enrich") {
-    val seqs = spark.read.parquet(inputDir)
-    val a = LogPipeline.run(spark, seqs, SequenceGen.configs)
-      .select("doc_id", "host", "host_type", "ts")
-    val b = LogPipeline.enrichStatic(LogPipeline.parse(seqs), SequenceGen.configs)
-      .select("doc_id", "host", "host_type", "ts")
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  test("enrich resolves sources by first-match glob order (known, unknown, null source)") {
+    import spark.implicits._
+    import graft.model.SourceConfig
+    def cfg(glob: String, host: String, hostType: String, fileType: String) =
+      SourceConfig(glob, fileType, Seq.empty, "", "2006/01/02 15:04:05.000000", host, hostType)
+    // "app-1.log" matches the first two globs: the first one wins
+    val configs = Seq(
+      cfg("app-*.log", "app-host", "app", "kv"),
+      cfg("app-1.log", "shadowed-host", "shadowed", "json"),
+      cfg("*.txt", "txt-host", "text", "access"))
+    val sources = Seq("app-1.log", "app-2.log", "web.txt", "dir/web.txt", "mystery.bin", null)
+    val seqs = sources.zipWithIndex.map { case (src, i) =>
+      (s"doc-$i", Vocab.encode("x").toSeq, 1, src) }
+      .toDF("doc_id", "tokens", "n_tok", "source")
+    val got = LogPipeline.run(spark, seqs, configs)
+      .select("source", "host", "host_type", "file_type", "sink").collect()
+      .map(r => Option(r.getString(0)) ->
+        Seq(r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
+      .toMap
+    val unknown = Seq("unknown-host", "unknown", "kv")
+    val expected: Map[Option[String], Seq[String]] = Map(
+      Some("app-1.log") -> Seq("app-host", "app", "kv", "app-1_log"),
+      Some("app-2.log") -> Seq("app-host", "app", "kv", "app-2_log"),
+      Some("web.txt") -> Seq("txt-host", "text", "access", "web_txt"),
+      // `*` does not cross `/`
+      Some("dir/web.txt") -> (unknown :+ "dir_web_txt"),
+      Some("mystery.bin") -> (unknown :+ "mystery_bin"),
+      None -> Seq(null, null, null, null))
+    assert(got == expected)
+  }
+
+  test("null source: null host and sink in the batch route and the streaming ingest alike") {
+    import spark.implicits._
+    val in = TestDirs.tmp("graft-nullsrc-in").toString
+    Seq(("doc-1", Vocab.encode("2021/01/20 19:37:00.000000 a=1").toSeq, 5, "log-0.txt"),
+        ("doc-2", Vocab.encode("2021/01/20 19:37:01.000000 a=2").toSeq, 5, null: String))
+      .toDF("doc_id", "tokens", "n_tok", "source")
+      .coalesce(1).write.mode("overwrite").parquet(in)
+    def hostSink(df: org.apache.spark.sql.DataFrame): Map[String, (String, String)] =
+      df.select("doc_id", "host", "sink").collect()
+        .map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
+    val expected = Map("doc-1" -> (("app-host", "log-0_txt")), "doc-2" -> ((null, null)))
+    val batchOut = TestDirs.tmp("graft-nullsrc-batch").toString
+    LogPipeline.routeWrite(
+      LogPipeline.run(spark, spark.read.parquet(in), SequenceGen.configs), batchOut, 4)
+    assert(hostSink(spark.read.parquet(batchOut)) == expected)
+    val streamOut = TestDirs.tmp("graft-nullsrc-stream").toString
+    graft.streaming.StreamingPipeline.ingest(spark, in, streamOut,
+      TestDirs.tmp("graft-nullsrc-ckpt").toString, SequenceGen.configs).awaitTermination()
+    assert(hostSink(spark.read.parquet(streamOut)) == expected)
   }
 
   test("parse: every kv/access/json row gets a real event time") {
@@ -131,13 +174,14 @@ class PipelineSpec extends AnyFunSuite {
 
   test("route output partitions by sink (pruned reads) and spreads skew") {
     val out = TestDirs.tmp("graft-skew").toString
-    val job = new RouteJob(spark, out, batches = 2, saltBuckets = 8)
+    val job = new RouteJob(spark, out, batches = 2, writers = 8)
     job.run(inputDir, SequenceGen.configs)
     // pruned read: only the hot sink's directory is touched
     val hot = job.routed().filter(col("sink") === "log-0_txt")
     val scan = hot.queryExecution.executedPlan.toString
     assert(hot.count() == oracle("log-0_txt"))
-    // salted write: the hot sink is split across multiple files per batch
+    // writers are the input splits, not sources: the hot sink is split
+    // across multiple files per batch
     val hotFiles = Files.walk(java.nio.file.Paths.get(out))
       .iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
     val cnt = {
@@ -171,6 +215,22 @@ class PipelineSpec extends AnyFunSuite {
     q2.awaitTermination()
     val c2 = spark.read.parquet(streamOut).count()
     assert(c2 == 1500L, "restart must process only the new file (no dupes)")
+  }
+
+  test("streaming ingest: a micro-batch over one 1,000-row file writes at most one file per sink") {
+    val in = TestDirs.tmp("graft-stream-files-in").toString
+    val out = TestDirs.tmp("graft-stream-files-out").toString
+    SequenceGen.sequences(spark, 1000, 2).coalesce(1).write.mode("overwrite").parquet(in)
+    graft.streaming.StreamingPipeline.ingest(spark, in, out,
+      TestDirs.tmp("graft-stream-files-ckpt").toString, SequenceGen.configs)
+      .awaitTermination()
+    assert(spark.read.parquet(out).count() == 1000L)
+    val perSink = scala.jdk.CollectionConverters.IteratorHasAsScala(
+        Files.walk(java.nio.file.Paths.get(out)).iterator()).asScala
+      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+      .toSeq.groupBy(_.getParent.getFileName.toString).view.mapValues(_.size).toMap
+    assert(perSink.nonEmpty && perSink.keys.forall(_.startsWith("sink=")), perSink)
+    assert(perSink.values.forall(_ == 1), s"files per sink: $perSink")
   }
 
   test("streaming ingest dedup drops re-shipped rows across batches via checkpointed state") {

@@ -63,12 +63,62 @@ class PlanSpec extends AnyFunSuite {
       s"prefilter is unsound for non-kv configs:\n$mplan")
   }
 
-  test("enrich is a broadcast hash join, not a shuffle join") {
+  /** Run `body` (a write) and return the executed plans of the queries it
+    * ran and the number of Spark jobs it started.
+    */
+  private def observeWrite(body: => Unit): (Seq[String], Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString): Unit
+      def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val jl = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    import org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty
+    waitListenerBusEmpty(spark.sparkContext, 10000L) // no earlier job's events
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(jl)
+    try {
+      body
+      waitListenerBusEmpty(spark.sparkContext, 10000L)
+    } finally {
+      spark.sparkContext.removeSparkListener(jl)
+      spark.listenerManager.unregister(qel)
+    }
+    (plans.toArray(Array.empty[String]).toSeq, jobs.get())
+  }
+
+  test("route write plan has no Exchange and no per-row regexp_replace") {
     val seqs = SequenceGen.sequences(spark, 1000, 2)
-    val plan = LogPipeline.run(spark, seqs, SequenceGen.configs)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"enrich must broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), s"no shuffle join in enrich:\n$plan")
+    val out = TestDirs.tmp("plan-route-shape").toString
+    val (plans, _) = observeWrite(LogPipeline.routeWrite(
+      LogPipeline.run(spark, seqs, SequenceGen.configs), out, 4))
+    assert(plans.size == 1, s"one write query expected: $plans")
+    val plan = plans.head
+    // scan -> parse -> enrich -> sort -> write is one stage: the enrich
+    // lookup rides inside the projection, the writers are the input's
+    // partitions, and the sink is resolved once per distinct source
+    assert(!plan.contains("Exchange"), s"route write must not shuffle:\n$plan")
+    assert(!plan.contains("Join"), s"enrich must not join:\n$plan")
+    assert(!plan.contains("regexp_replace"),
+      s"per-row regexp_replace (sink must come from the per-source lookup):\n$plan")
+    assert(spark.read.parquet(out).count() == 1000L)
+  }
+
+  test("a route write of a file-backed input runs as exactly one Spark job") {
+    val in = TestDirs.tmp("plan-route-1job-in").toString
+    SequenceGen.sequences(spark, 2000, 3).write.mode("overwrite").parquet(in)
+    val out = TestDirs.tmp("plan-route-1job-out").toString
+    val input = spark.read.parquet(in) // schema inference runs its own job
+    val (_, jobs) = observeWrite(LogPipeline.routeWrite(
+      LogPipeline.run(spark, input, SequenceGen.configs), out, 4))
+    assert(jobs == 1, s"enrich + route must be one job, saw $jobs")
+    assert(spark.read.parquet(out).count() == 2000L)
   }
 
   test("routed-sink query prunes sink partitions") {
@@ -85,9 +135,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("parse stage is one whole-stage-codegen span (no mid-parse exchange)") {
     val seqs = SequenceGen.sequences(spark, 1000, 2)
-    val parsed = LogPipeline.enrichStatic(LogPipeline.parse(seqs), SequenceGen.configs)
+    val parsed = LogPipeline.enrich(LogPipeline.parse(seqs), SequenceGen.configs)
     val plan = parsed.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"static parse+enrich must not shuffle:\n$plan")
+    assert(!plan.contains("Exchange"), s"parse+enrich must not shuffle:\n$plan")
     assert(plan.startsWith("*"), s"parse stage must be codegen'd:\n$plan")
   }
 
@@ -231,11 +281,6 @@ class PlanSpec extends AnyFunSuite {
       s"fields-map build must be pruned out of the write projection:\n$plan")
     assert(plan.toLowerCase.contains("extracttimevalue"),
       s"ts must come from the time-only extraction:\n$plan")
-    // sink sanitization must ride the broadcast dim (once per distinct
-    // source), never the 10^12-row side
-    val bigSide = plan.split("BroadcastExchange").head
-    assert(!bigSide.contains("regexp_replace"),
-      s"per-row regexp_replace on the big side (sink must come from the dim):\n$plan")
   }
 
   test("bucketed store: groupBy and self-join on the bucket key plan with ZERO exchanges") {
